@@ -61,11 +61,12 @@ def main(argv: list[str] | None = None) -> int:
         s.add_argument("--warehouse", required=True)
         if name == "stream":
             s.add_argument("--seconds", type=int, default=30)
-            s.add_argument(
+            zone_mode = s.add_mutually_exclusive_group()
+            zone_mode.add_argument(
                 "--upsert", action="store_true",
                 help="idempotent merge sink (replayed micro-batches converge)",
             )
-            s.add_argument(
+            zone_mode.add_argument(
                 "--snapshot", action="store_true",
                 help="exactly-once keyless zone sink (SnapshotTable commits "
                 "keyed on micro-batch id; kill-and-replay converges)",
@@ -135,8 +136,7 @@ def main(argv: list[str] | None = None) -> int:
 
         q = start_etl_stream(
             spark, args.raw, args.warehouse, cfg, trigger_seconds=5,
-            upsert=args.upsert,
-            mode="snapshot" if args.snapshot else None,
+            mode="upsert" if args.upsert else "snapshot" if args.snapshot else "append",
         )
         deadline = time.time() + args.seconds
         while time.time() < deadline and q.isActive:
@@ -150,7 +150,9 @@ def main(argv: list[str] | None = None) -> int:
 
         msgs = mixed_mode_stream(spark, rows_per_second=args.rate)
         q = (
-            msgs.writeStream.foreachBatch(make_etl_sink(args.warehouse, cfg, args.upsert))
+            msgs.writeStream.foreachBatch(
+                make_etl_sink(args.warehouse, cfg, mode="upsert" if args.upsert else "append")
+            )
             .trigger(processingTime="5 seconds")
             .option(
                 "checkpointLocation",

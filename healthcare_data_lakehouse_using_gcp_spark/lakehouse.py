@@ -6,7 +6,7 @@ airflow/dags/healthcare_data_pipeline_dag.py:139-149) with one
 class over a warehouse root:
 
     raw/        landed JSON messages (S1 input shape)
-    processed/  ETL output per entity, date-partitioned parquet (S3)
+    processed/  ETL output per entity, partitioned by event date (S3)
     errors/     unknown-type records as JSON (S4)
     curated/    fact table (S7); staging registered as views (S6)
 
@@ -17,6 +17,14 @@ partitioning the reference *documents* but never implemented
 — so every lookback scan (S5) partition-prunes instead of reading
 the full history: at 100 TB that is the difference between scanning
 30 partitions and 2555 days of them.
+
+One writer lands a routed ETL batch in ``processed/`` and
+``errors/``: ``write_etl_batch``. The Beam pipeline runs one
+transform graph bounded or unbounded (SURVEY.md §2.8 T4/T5); here
+the batch ETL (``HealthcareLakehouse.run_etl``) and the streaming
+foreachBatch sink (``streaming.pipeline.make_etl_sink``) both call
+it, so zone layout, the zone-mode guard, file packing and the
+per-route counts cannot drift between the two modes.
 """
 
 from __future__ import annotations
@@ -27,16 +35,143 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, EngineConfig
-from .operators.etl import build_etl_cached
+from .operators.etl import build_etl_cached, route_filters
 from .plans import reports
 from .plans.models import ModelRunner, healthcare_models
 from .sources.readers import read_json_batch
 
+# event-date source column per entity route
 ENTITY_DATE_COL = {
     "vitals": "timestamp",
     "claims": "service_date",
     "ehr": "visit_date",
 }
+
+# natural key per entity route, for the upsert zone mode
+UPSERT_KEYS = {
+    "vitals": ["patient_id", "timestamp"],
+    "claims": ["claim_id"],
+    "ehr": ["record_id"],
+}
+
+ZONE_MODES = ("snapshot", "append", "upsert")
+
+
+def _reject_zone_mode_mix(zone: str, snapshot: bool) -> None:
+    """Refuse to write a zone in the OTHER mode than it already holds
+    data in (ADVICE r8). A snapshot commit next to plain appended
+    parquet shadows those rows (manifest reads don't list them); a
+    plain append or upsert into a snapshot zone writes files no
+    manifest references. Both silently drop committed rows from
+    reads — fail loudly instead and point at the migration.
+
+    Detection is O(top-level entries), no tree walk: a plain
+    date-partitioned zone has event_date=*/part files at the top
+    level; a snapshot zone has only _snapshots/ + data/."""
+    if not os.path.isdir(zone):
+        return
+    entries = set(os.listdir(zone))
+    has_manifest = "_snapshots" in entries
+    has_plain = any(
+        e.startswith("event_date=") or e.endswith(".parquet")
+        for e in entries
+    )
+    if snapshot and has_plain:
+        raise ValueError(
+            f"zone {zone} already holds PLAIN appended parquet; a "
+            "snapshot commit would shadow those rows. Migrate first: "
+            "read the zone, commit_append it as the snapshot's "
+            "initial version, then remove the plain files."
+        )
+    if not snapshot and has_manifest:
+        raise ValueError(
+            f"zone {zone} is snapshot-managed (_snapshots/ present); "
+            "a plain append would write files no manifest references. "
+            "Keep writing it in snapshot mode."
+        )
+
+
+def write_etl_batch(
+    raw: DataFrame,
+    warehouse: str,
+    cfg: EngineConfig = DEFAULT_CONFIG,
+    mode: str = "append",
+    txn_ids: dict[str, str] | None = None,
+) -> dict[str, int]:
+    """Run the ETL over one bounded batch of raw messages and land
+    each route in its zone — the Beam multi-sink fan-out
+    (healthcare_etl_pipeline.py:290-348) for batch and stream alike.
+
+    Entity routes go to ``processed/<entity>`` with an ``event_date``
+    column, in one of three zone modes:
+
+    - ``"snapshot"``: SnapshotTable.commit_append, idempotent under
+      ``txn_ids[entity]`` (a replayed token no-ops; the other modes
+      ignore ``txn_ids``);
+    - ``"append"``: plain date-partitioned parquet append, the
+      reference's WRITE_APPEND — a replay duplicates rows;
+    - ``"upsert"``: sources/upsert.merge_upsert on the entity's
+      natural key (latest processed_at wins); only the batch's date
+      partitions are rewritten.
+
+    Snapshot and append writes rebalance by ``event_date`` first, so
+    a batch writes whole files per date instead of one sliver per
+    upstream task (AQE still splits a hot date across writers). A
+    zone already holding data in the other layout (snapshot vs plain)
+    is refused before any zone is written. Unknown-type rows
+    append to ``errors/`` as JSON in every mode (at-least-once: a
+    diagnostic stream).
+
+    Returns this batch's rows per route — the reference's
+    Count.Globally metric (:351-355) — from ONE aggregate over the
+    persisted enriched frame after the writes, so the count is the
+    same on a txn replay, where no entity write runs. (A row-count
+    ``Observation`` per write was tried: it initializes the session's
+    ObservationManager, which is not serializable, and every later
+    Spark ML fit whose closure captures the session then fails with
+    "Task not serializable".)
+    """
+    from .sources.snapshots import SnapshotTable
+    from .sources.upsert import merge_upsert
+
+    if mode not in ZONE_MODES:
+        raise ValueError(f"unknown zone mode {mode!r}")
+    zones = {name: os.path.join(warehouse, "processed", name) for name in ENTITY_DATE_COL}
+    for zone in zones.values():
+        _reject_zone_mode_mix(zone, snapshot=mode == "snapshot")
+    spark = raw.sparkSession
+    routed, enriched = build_etl_cached(raw, cfg)
+    try:
+        for name, date_col in ENTITY_DATE_COL.items():
+            zone = zones[name]
+            df = routed[name].withColumn(
+                "event_date", F.to_date(F.col(date_col))
+            )
+            if mode == "snapshot":
+                # the caller rebalances: SnapshotTable._write_data never
+                # reshuffles, because it also serves the layout commits
+                SnapshotTable(spark, zone).commit_append(
+                    df.hint("rebalance", "event_date"),
+                    txn_id=(txn_ids or {}).get(name),
+                )
+            elif mode == "append":
+                df.hint("rebalance", "event_date").write.mode(
+                    "append"
+                ).partitionBy("event_date").parquet(zone)
+            else:
+                merge_upsert(
+                    spark, df, zone, UPSERT_KEYS[name],
+                    version_col="processed_at", partition_col="event_date",
+                )
+        routed["unknown"].drop("_corrupt_record").write.mode("append").json(
+            os.path.join(warehouse, "errors")
+        )
+        row = enriched.agg(
+            *[F.count_if(cond).alias(name) for name, cond in route_filters().items()]
+        ).first()
+        return row.asDict()
+    finally:
+        enriched.unpersist()
 
 
 class HealthcareLakehouse:
@@ -76,40 +211,6 @@ class HealthcareLakehouse:
 
     # --- ingestion → processed (the Beam pipeline, batch mode) -------
 
-    @staticmethod
-    def _reject_zone_mode_mix(zone: str, snapshot: bool) -> None:
-        """Refuse to write a zone in the OTHER mode than it already
-        holds data in (ADVICE r8). A snapshot commit next to plain
-        appended parquet shadows those rows (manifest reads don't
-        list them); a plain append into a snapshot zone writes files
-        no manifest references. Both silently drop committed rows
-        from reads — fail loudly instead and point at the migration.
-
-        Detection is O(top-level entries), no tree walk: a plain
-        date-partitioned zone has event_date=*/part files at the top
-        level; a snapshot zone has only _snapshots/ + data/."""
-        if not os.path.isdir(zone):
-            return
-        entries = set(os.listdir(zone))
-        has_manifest = "_snapshots" in entries
-        has_plain = any(
-            e.startswith("event_date=") or e.endswith(".parquet")
-            for e in entries
-        )
-        if snapshot and has_plain:
-            raise ValueError(
-                f"zone {zone} already holds PLAIN appended parquet; a "
-                "snapshot commit would shadow those rows. Migrate first: "
-                "read the zone, commit_append it as the snapshot's "
-                "initial version, then remove the plain files."
-            )
-        if not snapshot and has_manifest:
-            raise ValueError(
-                f"zone {zone} is snapshot-managed (_snapshots/ present); "
-                "a plain append would write files no manifest references. "
-                "Pass txn_id=... to keep committing through the manifest."
-            )
-
     def run_etl(
         self,
         raw_path: str | None = None,
@@ -118,35 +219,24 @@ class HealthcareLakehouse:
         snapshot: bool | None = None,
     ) -> dict:
         """Parse/validate/filter/enrich/demux raw JSON messages and
-        append each route into the processed zone (date-partitioned).
+        write each route through ``write_etl_batch``.
 
         Counterpart of `python healthcare_etl_pipeline.py` in batch
         mode (healthcare_etl_pipeline.py:248-249). Returns per-route
-        row counts (the Count.Globally metric, :351-355).
+        row counts of THIS run (the Count.Globally metric, :351-355).
 
-        ``txn_id`` (VERDICT r7 item 6) switches the entity-zone writes
-        from plain append parquet to SnapshotTable.commit_append with
-        a per-entity idempotence token — re-running the same batch
-        (orchestrator retry, backfill replay) converges instead of
-        duplicating rows; the counts still report THIS run's routed
-        rows either way. Mixing modes on one zone is REJECTED here
-        (ADVICE r8): a snapshot commit into a zone holding plain
-        appended parquet would shadow those rows (read_processed then
-        resolves via the manifest, which doesn't list them), and a
-        plain append into a snapshot zone writes files no manifest
-        references — either way previously committed rows silently
-        vanish from reads. Migrate explicitly instead (read the plain
-        zone, commit it as the snapshot's initial version, remove the
-        plain files).
+        ``snapshot=True`` commits the entity zones through
+        SnapshotTable manifests (atomic, time travel, torn writes
+        invisible); False writes the reference-parity plain
+        date-partitioned append. Default None means snapshot iff
+        ``txn_id`` was given. The CLI defaults to snapshot mode (opt
+        out with --plain-append).
 
-        ``snapshot`` (r10, ROADMAP item 3) decouples the sink mode
-        from idempotence: True commits the entity zones through
-        SnapshotTable manifests even without a txn token (atomic,
-        time-travel, torn writes invisible; replay protection still
-        needs txn_id), False forces the reference-parity plain
-        date-partitioned append. Default None keeps the historical
-        inference: snapshot iff txn_id was given. The CLI defaults to
-        snapshot mode from r10 (opt out with --plain-append).
+        ``txn_id`` makes a re-run of the same batch (orchestrator
+        retry, backfill replay) converge instead of duplicating rows:
+        each entity commits under the token ``{txn_id}-{entity}``. It
+        needs snapshot mode. Writing a zone in the other mode than it
+        already holds is refused (see ``write_etl_batch``).
         """
         snap = (txn_id is not None) if snapshot is None else bool(snapshot)
         if txn_id is not None and not snap:
@@ -156,61 +246,17 @@ class HealthcareLakehouse:
             )
         if raw_df is None:
             raw_df = read_json_batch(self.spark, raw_path)
-        # cache=True: the four routes + counts share one parse/enrich
-        # pass instead of recomputing the batch lineage per branch
-        routed, enriched = build_etl_cached(raw_df, self.cfg, cache=True)
-        counts: dict[str, int] = {}
-        try:
-            for name, date_col in ENTITY_DATE_COL.items():
-                df = routed[name].withColumn(
-                    "event_date", F.to_date(F.col(date_col))
-                )
-                zone = self.zone_path("processed", name)
-                self._reject_zone_mode_mix(zone, snapshot=snap)
-                if snap:
-                    from .sources.snapshots import SnapshotTable
-
-                    # rebalance BEFORE the snapshot append (optimization
-                    # r17, guide §6, VERDICT r16 item 6): _write_data
-                    # deliberately never reshuffles (it also serves the
-                    # Z-order/Hilbert layout commits, whose clustering a
-                    # rebalance would destroy), so sliver control is the
-                    # CALLER's job. A plain ETL batch has no layout to
-                    # protect — without this, every batch appends one
-                    # part file per upstream task. Clustering by
-                    # event_date also tightens the per-file min/max
-                    # stats the snapshot scan prunes with.
-                    SnapshotTable(self.spark, zone).commit_append(
-                        df.hint("rebalance", "event_date"),
-                        txn_id=(
-                            f"{txn_id}-{name}" if txn_id is not None else None
-                        ),
-                    )
-                else:
-                    # rebalance by the partition column (optimization
-                    # r16, guide §6): otherwise each task writes a
-                    # sliver into every touched date directory and the
-                    # zone accumulates (tasks × dates) tiny files per
-                    # batch; AQE packs whole advisory-sized files per
-                    # date and still splits a hot date across writers
-                    df.hint("rebalance", "event_date").write.mode(
-                        "append"
-                    ).partitionBy("event_date").parquet(zone)
-                # Count THIS batch's routed rows (from the cached
-                # enriched frame), not the re-read table: the
-                # reference's Count.Globally metric is run-scoped
-                # (healthcare_etl_pipeline.py:351-355) — on a second
-                # run it reports that run's records, not the table
-                # total.
-                counts[name] = df.count()
-            unknown = routed["unknown"].drop("_corrupt_record")
-            n_unknown = unknown.count()
-            if n_unknown > 0:
-                unknown.write.mode("append").json(self.zone_path("errors"))
-            counts["unknown"] = n_unknown
-        finally:
-            enriched.unpersist()
-        return counts
+        return write_etl_batch(
+            raw_df,
+            self.warehouse,
+            self.cfg,
+            mode="snapshot" if snap else "append",
+            txn_ids=(
+                {name: f"{txn_id}-{name}" for name in ENTITY_DATE_COL}
+                if txn_id is not None
+                else None
+            ),
+        )
 
     # --- bucketed curated tables (shuffle-free repeated joins) -------
 

@@ -24,7 +24,7 @@ partition count.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
@@ -197,13 +197,26 @@ def enrich(clean: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
     )
 
 
+def route_filters() -> dict[str, Column]:
+    """The data_type predicate of each route (DataPartitioner,
+    healthcare_etl_pipeline.py:210-223)."""
+    data_type = F.col("data_type")
+    return {
+        "vitals": data_type == "patient_vitals",
+        "claims": data_type == "insurance_claim",
+        "ehr": data_type == "ehr_record",
+        # well-formed rows with unrecognized data_type (:222-223)
+        "unknown": F.col("_corrupt_record").isNull() & ~data_type.isin(*KNOWN_TYPES),
+    }
+
+
 def demux(enriched: DataFrame) -> dict[str, DataFrame]:
     """P7: route by data_type (DataPartitioner,
     healthcare_etl_pipeline.py:210-223).
 
-    Four filters over one lineage; in batch mode callers should
-    ``.cache()`` upstream (or write partitionBy("data_type")) so the
-    scan+parse isn't re-executed per branch.
+    Four filters over one lineage; a caller that consumes several
+    routes should use build_etl_cached so the scan+parse isn't
+    re-executed per branch.
     """
     vitals_cols = [
         "patient_id", "timestamp", "heart_rate", "blood_pressure_systolic",
@@ -224,47 +237,41 @@ def demux(enriched: DataFrame) -> dict[str, DataFrame]:
         "pipeline_version", "data_quality_score", "medication_count",
         "lab_test_count",
     ]
+    routes = route_filters()
     return {
-        "vitals": enriched.filter(F.col("data_type") == "patient_vitals").select(vitals_cols),
-        "claims": enriched.filter(F.col("data_type") == "insurance_claim").select(claims_cols),
-        "ehr": enriched.filter(F.col("data_type") == "ehr_record").select(ehr_cols),
-        # well-formed rows with unrecognized data_type (:222-223)
-        "unknown": enriched.filter(
-            F.col("_corrupt_record").isNull() & ~F.col("data_type").isin(*KNOWN_TYPES)
-        ),
+        "vitals": enriched.filter(routes["vitals"]).select(vitals_cols),
+        "claims": enriched.filter(routes["claims"]).select(claims_cols),
+        "ehr": enriched.filter(routes["ehr"]).select(ehr_cols),
+        "unknown": enriched.filter(routes["unknown"]),
     }
 
 
-def build_etl(
-    raw: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG, cache: bool = False
-) -> dict[str, DataFrame]:
-    """Full pipeline: parse → flags → filter → enrich → demux.
-
-    Works identically on batch and streaming inputs (T4).
-    ``cache=True`` persists the enriched frame so the four demux
-    branches (and any per-branch counts) share one parse/enrich pass
-    instead of recomputing the lineage per consumer — batch callers
-    that touch several routes should use it (streaming callers persist
-    the micro-batch instead).
-    """
-    routes, _ = build_etl_cached(raw, cfg, cache=cache)
-    return routes
-
-
-def build_etl_cached(
-    raw: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG, cache: bool = True
-) -> tuple[dict[str, DataFrame], DataFrame]:
-    """build_etl + the (possibly persisted) enriched frame, so batch
-    callers can unpersist it once their routes are materialized
-    instead of leaking cached blocks across runs in a long session."""
+def _enriched(raw: DataFrame, cfg: EngineConfig) -> DataFrame:
     parsed = parse_envelope(raw, cfg)
     flagged = with_validation_flags(parsed, cfg)
     clean = quality_filter(flagged)
-    enriched = enrich(clean, cfg)
-    if cache:
-        enriched = enriched.persist()
     # Unknown-type rows pass the quality filter unchanged (no required
     # fields defined for them, no anomaly flags), matching the
     # reference flow where DataPartitioner runs post-filter
     # (healthcare_etl_pipeline.py:277-293).
+    return enrich(clean, cfg)
+
+
+def build_etl(raw: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> dict[str, DataFrame]:
+    """Full pipeline: parse → flags → filter → enrich → demux.
+
+    Works identically on batch and streaming inputs (T4).
+    """
+    return demux(_enriched(raw, cfg))
+
+
+def build_etl_cached(
+    raw: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG
+) -> tuple[dict[str, DataFrame], DataFrame]:
+    """build_etl over a PERSISTED enriched frame, so a writer that
+    consumes all four routes shares one parse/enrich pass instead of
+    recomputing the lineage per branch. Returns (routes, enriched);
+    the caller unpersists ``enriched`` once its routes are written, so
+    a long-lived session does not accumulate cached blocks."""
+    enriched = _enriched(raw, cfg).persist()
     return demux(enriched), enriched

@@ -2,15 +2,13 @@
 
 The reference's I/O surface → Spark:
   Pub/Sub topic read (S1)  → readStream file/kafka source of JSON lines
-  BigQuery append sink (S3)→ parquet append (saveAsTable-compatible);
-                             format pluggable ("bigquery" on GCP)
-  Text error sink (S4)     → df.write.json under errors/
+  BigQuery append sink (S3)→ date-partitioned parquet append or
+                             snapshot commit (lakehouse.write_etl_batch)
+  Text error sink (S4)     → df.write.json under errors/ (same writer)
   Zoned lakehouse (§1.1)   → warehouse root with raw/processed/curated
 
-Scale notes: writes partition by event date (the partitioning the
-reference documents but never implements — SURVEY.md §4) so the
-lookback scans (S5) partition-prune; `maxFilesPerTrigger` bounds
-micro-batch size for the streaming source.
+Scale note: `maxFilesPerTrigger` bounds micro-batch size for the
+streaming source.
 """
 
 from __future__ import annotations
@@ -89,50 +87,3 @@ def read_json_batch(spark: SparkSession, path: str) -> DataFrame:
     """Bounded variant of S1 (the --streaming flag off,
     healthcare_etl_pipeline.py:248-249): same 'value' column shape."""
     return spark.read.text(path)
-
-
-def write_zone_table(
-    df: DataFrame,
-    warehouse: str,
-    zone: str,
-    table: str,
-    partition_cols: list[str] | None = None,
-    mode: str = "append",
-) -> None:
-    """S3: append write into a lakehouse zone (raw/processed/curated
-    — terraform/main.tf:118-245's bucket/dataset split as parquet
-    dirs). Declared-schema append matches WRITE_APPEND /
-    CREATE_IF_NEEDED (healthcare_etl_pipeline.py:306-307).
-
-    Optimization r16 (guide §6): REBALANCE by the partition columns
-    before a partitioned write — without it every upstream task holds
-    rows of every partition value and the layout degenerates to
-    (tasks × values) sliver files per append (the save_ivf_index
-    lesson). AQE clusters each value into whole advisory-sized files
-    while still splitting a hot value across writers; same rows,
-    same directories, fewer+larger files. The hot-value splitting
-    comes from AQE's optimizeSkewsInRebalancePartitions — with a
-    caller-supplied session that disables AQE, REBALANCE degrades to
-    plain hash partitioning and a hot value serializes onto one
-    writer (sessions from this repo's get_spark always enable AQE)."""
-    if partition_cols:
-        writer = df.hint("rebalance", *partition_cols).write.mode(mode)
-        writer = writer.partitionBy(*partition_cols)
-    else:
-        writer = df.write.mode(mode)
-    writer.parquet(os.path.join(warehouse, zone, table))
-
-
-def write_error_sink(df: DataFrame, warehouse: str) -> None:
-    """S4: unknown-type records as JSON files under errors/
-    (healthcare_etl_pipeline.py:342-348)."""
-    df.write.mode("append").json(os.path.join(warehouse, "errors"))
-
-
-def read_zone_table(spark: SparkSession, warehouse: str, zone: str, table: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(warehouse, zone, table))
-
-
-def with_event_date(df: DataFrame, ts_col: str, out_col: str = "event_date") -> DataFrame:
-    """Partition column for date-partitioned zone writes."""
-    return df.withColumn(out_col, F.to_date(F.col(ts_col)))

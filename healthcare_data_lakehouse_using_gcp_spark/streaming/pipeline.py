@@ -4,11 +4,13 @@ The reference's streaming mode (healthcare_etl_pipeline.py:255-269):
 Pub/Sub read → 60 s fixed windows with a 30 s processing-time
 trigger, ACCUMULATING — but its actual dataflow is stateless
 per-record transforms (parse/filter/enrich/route), so windows never
-feed an aggregation. We mirror that: the SAME `build_etl` transform
-runs over `readStream` (T4 batch/stream parity by construction), a
-processing-time trigger (T2), and a foreachBatch multi-sink fan-out
-(T5: 3 entity tables + error sink,
-healthcare_etl_pipeline.py:290-348).
+feed an aggregation. We mirror that: `start_etl_stream` reads
+`readStream` with a processing-time trigger (T2) and hands every
+micro-batch to `make_etl_sink`, whose foreachBatch body is
+`lakehouse.write_etl_batch` — the SAME transform and the SAME zone
+writer the batch `HealthcareLakehouse.run_etl` calls (T4 batch/stream
+parity by construction, T5 multi-sink fan-out: 3 entity tables +
+error sink, healthcare_etl_pipeline.py:290-348).
 
 Beyond-reference (flagged per SURVEY.md §2.8): event-time windowed
 aggregation WITH watermark — Structured Streaming's answer to the
@@ -31,90 +33,48 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import DEFAULT_CONFIG, EngineConfig
-from ..operators.etl import build_etl
+from ..lakehouse import ENTITY_DATE_COL, ZONE_MODES, write_etl_batch
 from ..operators.sessions import _epoch_seconds
 from ..sources.readers import read_json_stream
-
-
-# natural keys + event-date partition column per entity route, for
-# the idempotent-upsert sink mode (sources/upsert.merge_upsert)
-UPSERT_KEYS = {
-    "vitals": (["patient_id", "timestamp"], "timestamp"),
-    "claims": (["claim_id"], "service_date"),
-    "ehr": (["record_id"], "visit_date"),
-}
 
 
 def make_etl_sink(
     warehouse: str,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    upsert: bool = False,
-    mode: str | None = None,
+    mode: str = "append",
 ):
-    """The per-micro-batch multi-sink fan-out (T5), as a reusable
-    foreachBatch function. Three sink modes (``mode`` wins; the
-    legacy ``upsert`` flag maps False→"append", True→"upsert"):
+    """The per-micro-batch ETL as a foreachBatch function: each batch
+    goes through ``lakehouse.write_etl_batch``, the writer the batch
+    ``run_etl`` uses, so a stream and a batch run land identical zone
+    layouts and can share a warehouse. ``mode`` picks the entity-zone
+    mode:
 
-    - ``"append"``: plain append, byte-faithful to the reference's
-      WRITE_APPEND sinks — a replayed batch duplicates rows, exactly
-      as the reference would.
-    - ``"upsert"``: each route merges through
-      sources/upsert.merge_upsert on its natural key (latest
+    - ``"append"``: date-partitioned parquet append, byte-faithful to
+      the reference's WRITE_APPEND sinks — a replayed batch duplicates
+      rows, exactly as the reference would.
+    - ``"upsert"``: merge on each route's natural key (latest
       processed_at wins), so at-least-once delivery and micro-batch
-      replays converge — the keyed answer to Pub/Sub redelivery. Only
-      the date partitions present in the batch are rewritten.
-    - ``"snapshot"`` (VERDICT r7 item 6): each route commits through
-      sources/snapshots.SnapshotTable.commit_append with
-      ``txn_id=f"etl-batch-{batch_id}"`` — the exactly-once append
-      sink for KEYLESS zones. foreachBatch retries redeliver the same
-      batch_id, the token matches an already-published manifest, and
-      the commit no-ops: kill-and-replay converges with no natural
-      key needed and no partition rewrites (O(new data) per batch).
-      Readers must resolve the zone via SnapshotTable.read (or
-      HealthcareLakehouse.read_processed, which auto-detects) —
-      listing the directory would see torn/orphan files.
+      replays converge — the keyed answer to Pub/Sub redelivery.
+    - ``"snapshot"``: SnapshotTable commits under the token
+      ``etl-batch-{batch_id}`` — the exactly-once sink for keyless
+      zones. foreachBatch retries redeliver the same batch_id, the
+      token matches an already-published manifest, and the commit
+      no-ops. Read the zone through HealthcareLakehouse.read_processed
+      (or SnapshotTable.read).
 
-    The errors/ JSON route stays at-least-once in every mode — it is
-    a diagnostic stream, and duplicated error rows are preferable to
-    buffering arbitrary corrupt payloads through a keyed merge.
+    A zone already holding the other layout (snapshot vs plain) makes
+    the batch raise instead of writing rows no reader would see.
+    ``errors/`` gets the unknown-type route as JSON in every mode,
+    at-least-once.
     """
-    if mode is None:
-        mode = "upsert" if upsert else "append"
-    if mode not in ("append", "upsert", "snapshot"):
-        raise ValueError(f"unknown sink mode {mode!r}")
+    if mode not in ZONE_MODES:
+        raise ValueError(f"unknown zone mode {mode!r}")
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from ..sources.snapshots import SnapshotTable
-        from ..sources.upsert import merge_upsert
-
-        batch_df.persist()
-        try:
-            routed = build_etl(batch_df, cfg)
-            for name in ("vitals", "claims", "ehr"):
-                path = os.path.join(warehouse, "processed", name)
-                keys, date_col = UPSERT_KEYS[name]
-                if mode == "upsert":
-                    df = routed[name].withColumn(
-                        "event_date", F.to_date(F.col(date_col))
-                    )
-                    merge_upsert(
-                        batch_df.sparkSession, df, path, keys,
-                        version_col="processed_at", partition_col="event_date",
-                    )
-                elif mode == "snapshot":
-                    df = routed[name].withColumn(
-                        "event_date", F.to_date(F.col(date_col))
-                    )
-                    SnapshotTable(batch_df.sparkSession, path).commit_append(
-                        df, txn_id=f"etl-batch-{batch_id}"
-                    )
-                else:
-                    routed[name].write.mode("append").parquet(path)
-            routed["unknown"].drop("_corrupt_record").write.mode("append").json(
-                os.path.join(warehouse, "errors")
-            )
-        finally:
-            batch_df.unpersist()
+        write_etl_batch(
+            batch_df, warehouse, cfg, mode,
+            txn_ids=dict.fromkeys(ENTITY_DATE_COL, f"etl-batch-{batch_id}"),
+        )
 
     return _sink
 
@@ -343,8 +303,7 @@ def start_etl_stream(
     cfg: EngineConfig = DEFAULT_CONFIG,
     trigger_seconds: int = 30,
     checkpoint: str | None = None,
-    upsert: bool = False,
-    mode: str | None = None,
+    mode: str = "append",
 ) -> StreamingQuery:
     """T4+T5: streaming ETL with per-micro-batch multi-sink fan-out.
 
@@ -352,12 +311,12 @@ def start_etl_stream(
     routes — the Spark analogue of Beam's TaggedOutput multi-sink
     (healthcare_etl_pipeline.py:290-348). The 30 s processing-time
     trigger mirrors AfterProcessingTime(30) (:261). See make_etl_sink
-    for the append / idempotent-upsert / exactly-once-snapshot sink
+    for the append / idempotent-upsert / exactly-once-snapshot zone
     modes.
     """
     raw = read_json_stream(spark, input_path)
     return (
-        raw.writeStream.foreachBatch(make_etl_sink(warehouse, cfg, upsert, mode))
+        raw.writeStream.foreachBatch(make_etl_sink(warehouse, cfg, mode))
         .trigger(processingTime=f"{trigger_seconds} seconds")
         .option(
             "checkpointLocation",
@@ -467,17 +426,6 @@ def stream_stream_band_join(
         & (rts <= lts + F.make_dt_interval(secs=band))
     )
     return l.join(r, cond, how)
-
-
-def run_batch_equivalent(
-    spark: SparkSession, input_path: str, cfg: EngineConfig = DEFAULT_CONFIG
-) -> dict[str, DataFrame]:
-    """The --streaming flag off (healthcare_etl_pipeline.py:248-249):
-    identical transform over a bounded read. Used to assert
-    batch/stream parity (T4)."""
-    from ..sources.readers import read_json_batch
-
-    return build_etl(read_json_batch(spark, input_path), cfg)
 
 
 def session_window_counts(

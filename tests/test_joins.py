@@ -75,8 +75,8 @@ def test_asof_min_by_matches_rank1(spark):
 
 def test_asof_min_by_packed_equals_struct_and_fails_loud(spark):
     """Optimization r17: the packed min_by guard moved from a per-row
-    when/raise chain to a per-component violation mask max-aggregated
-    per group. Pin (a) packed ≡ struct on in-range data, (b) the plan
+    when/raise chain to a per-component violation mask, aggregated per
+    group as a boolean any-violation. Pin (a) packed ≡ struct on in-range data, (b) the plan
     stays a sort-free HashAggregate, (c) out-of-range and NULL tie
     values still raise on evaluation instead of silently mis-ranking."""
     df = spark.createDataFrame(
@@ -122,6 +122,41 @@ def test_asof_min_by_packed_equals_struct_and_fails_loud(spark):
     )
     with pytest.raises((Py4JJavaError, PythonException, Exception)):
         joins.asof_select_min_by(nulled, tie_bits=(3,), **kwargs).collect()
+
+
+def _mixed_group_min_by(spark, bad_tie):
+    # one group holding a clean row (tie 0, the would-be winner) and a
+    # row whose tie breaker cannot be packed into tie_bits=(3,)
+    df = spark.createDataFrame(
+        [
+            ("P1", "2024-06-10", "2024-06-08", 0, 101),
+            ("P1", "2024-06-10", "2024-06-05", bad_tie, 999),
+        ],
+        "key string, l_date string, r_date string, tie int, val int",
+    )
+    return joins.asof_select_min_by(
+        df,
+        partition_cols=["key"],
+        left_date="l_date",
+        right_date="r_date",
+        value_cols=["val"],
+        tie_breakers=["tie"],
+        tie_bits=(3,),
+    )
+
+
+def test_asof_min_by_packed_negative_tie_in_mixed_group_raises(spark):
+    """A negative tie breaker gives a negative violation word; a clean
+    row's 0 in the same group must not hide it."""
+    with pytest.raises(Exception, match="outside the packable range"):
+        _mixed_group_min_by(spark, -1).collect()
+
+
+def test_asof_min_by_packed_null_tie_in_mixed_group_raises(spark):
+    """A NULL tie breaker next to a clean row in the same group must
+    raise, not be skipped by min_by."""
+    with pytest.raises(Exception, match="outside the packable range"):
+        _mixed_group_min_by(spark, None).collect()
 
 
 def test_salted_join_equals_plain_join(spark):

@@ -164,31 +164,120 @@ def test_cli_txn_id_with_plain_append_is_usage_error():
     assert e.value.code == 2
 
 
-def test_partitioned_zone_write_packs_whole_files(spark, tmp_path):
-    # Optimization r16 (guide §6): a date-partitioned append used to
-    # emit one part file per (upstream task × date) — 32 partitions
-    # over 5 dates wrote ~160 slivers. The rebalance-by-partition-col
-    # clusters each date into whole advisory-sized files; same rows,
-    # same directories.
-    import glob
+def test_cli_stream_upsert_with_snapshot_is_usage_error():
+    # the two stream zone modes are one choice: asking for both must be
+    # an argparse usage error (exit code 2) before a SparkSession is
+    # built, never a silent pick of one of them
+    import pytest
 
+    from healthcare_data_lakehouse_using_gcp_spark.__main__ import main
+
+    with pytest.raises(SystemExit) as e:
+        main([
+            "stream", "--raw", "/nonexistent", "--warehouse", "/nonexistent",
+            "--upsert", "--snapshot",
+        ])
+    assert e.value.code == 2
+
+
+def _raw_batch(spark, cfg, n, seed, partitions=None):
+    gen = HealthcareDataGenerator(seed=seed, now=cfg.as_of)
+    df = spark.createDataFrame([(m,) for m in gen.generate_messages(n)], "value string")
+    return df.repartition(partitions) if partitions else df
+
+
+def _max_files_per_date(df):
     from pyspark.sql import functions as F
 
-    from healthcare_data_lakehouse_using_gcp_spark.sources.readers import (
-        write_zone_table,
+    per_date = (
+        df.select("event_date", F.input_file_name().alias("f"))
+        .distinct()
+        .groupBy("event_date")
+        .count()
+        .collect()
     )
+    assert per_date
+    return max(r["count"] for r in per_date)
 
-    df = spark.range(0, 20000, 1, 32).select(
-        F.col("id"),
-        F.date_add(F.lit("2024-01-01"), (F.col("id") % 5).cast("int")).alias(
-            "event_date"
-        ),
-    )
-    write_zone_table(df, str(tmp_path), "processed", "demo", ["event_date"])
-    files = glob.glob(str(tmp_path / "processed" / "demo" / "*" / "*.parquet"))
-    dates = {f.rsplit("/", 2)[1] for f in files}
-    assert len(dates) == 5
-    # one file per date at this size (AQE may split a genuinely hot
-    # date — allow a small factor, never the old tasks×dates blow-up)
-    assert len(files) <= 2 * len(dates), files
-    assert spark.read.parquet(str(tmp_path / "processed" / "demo")).count() == 20000
+
+def test_partitioned_zone_write_packs_whole_files(spark, cfg, tmp_path):
+    # A 32-partition raw batch holds every date in every partition.
+    # The shared ETL writer rebalances by event_date before both the
+    # plain append and the snapshot commit, so each date lands in whole
+    # files instead of one sliver per upstream task.
+    from healthcare_data_lakehouse_using_gcp_spark.streaming.pipeline import make_etl_sink
+
+    raw = _raw_batch(spark, cfg, 1500, seed=43, partitions=32)
+    plain = HealthcareLakehouse(spark, str(tmp_path / "plain"), cfg)
+    counts = plain.run_etl(raw_df=raw, snapshot=False)
+    snap = HealthcareLakehouse(spark, str(tmp_path / "snap"), cfg)
+    make_etl_sink(snap.warehouse, cfg, mode="snapshot")(raw, 0)
+    for lh in (plain, snap):
+        for e in ("vitals", "claims", "ehr"):
+            zone = lh.read_processed(e)
+            assert zone.count() == counts[e], (lh.warehouse, e)
+            # AQE may split a genuinely hot date — allow a small factor
+            assert _max_files_per_date(zone) <= 2, (lh.warehouse, e)
+
+
+def test_stream_append_after_batch_plain_etl_is_readable(spark, cfg, tmp_path):
+    # A batch plain ETL and a stream append into the same warehouse
+    # write one layout, so every row of both stays visible.
+    from healthcare_data_lakehouse_using_gcp_spark.streaming.pipeline import make_etl_sink
+
+    raw = _raw_batch(spark, cfg, 200, seed=41)
+    lh = HealthcareLakehouse(spark, str(tmp_path / "wh"), cfg)
+    counts = lh.run_etl(raw_df=raw, snapshot=False)
+    make_etl_sink(lh.warehouse, cfg, mode="append")(raw, 0)
+    for e in ("vitals", "claims", "ehr"):
+        assert lh.read_processed(e).count() == 2 * counts[e], e
+    assert spark.read.json(lh.zone_path("errors")).count() == 2 * counts["unknown"]
+
+
+def test_stream_append_into_snapshot_zone_raises(spark, cfg, tmp_path):
+    # The CLI etl default (snapshot zones) followed by the stream's
+    # default append mode: the append would write files no manifest
+    # references, so the micro-batch must fail instead.
+    import pytest
+
+    from healthcare_data_lakehouse_using_gcp_spark.streaming.pipeline import make_etl_sink
+
+    raw = _raw_batch(spark, cfg, 200, seed=41)
+    lh = HealthcareLakehouse(spark, str(tmp_path / "wh"), cfg)
+    counts = lh.run_etl(raw_df=raw, snapshot=True)
+    with pytest.raises(ValueError, match="snapshot-managed"):
+        make_etl_sink(lh.warehouse, cfg)(raw, 0)
+    for e in ("vitals", "claims", "ehr"):
+        assert lh.read_processed(e).count() == counts[e], e
+
+
+# run_etl on 200 messages of generator seed 41 under the suite's frozen
+# as-of time, measured when each route paid its own count() action:
+# these counts, 16 Spark jobs for a fresh snapshot run
+SEED41_COUNTS = {"vitals": 97, "claims": 45, "ehr": 36, "unknown": 7}
+SEED41_JOBS_BEFORE = 16
+
+
+def test_run_etl_counts_in_one_aggregate(spark, cfg, tmp_path):
+    # The per-route counts come from one aggregate over the persisted
+    # batch, not from a count() per route: the same counts with at
+    # least 4 fewer jobs, fresh and on a txn replay.
+    raw_dir = tmp_path / "raw"
+    raw_dir.mkdir()
+    gen = HealthcareDataGenerator(seed=41, now=cfg.as_of)
+    (raw_dir / "m.json").write_text("\n".join(gen.generate_messages(200)))
+    lh = HealthcareLakehouse(spark, str(tmp_path / "wh"), cfg)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for run in ("fresh", "replay"):
+        group = f"run_etl_jobs_{run}"
+        sc.setJobGroup(group, "run_etl job count")
+        try:
+            counts = lh.run_etl(str(raw_dir), txn_id="seed41")
+        finally:
+            sc.setJobGroup("", "")
+        assert counts == SEED41_COUNTS, run
+        n_jobs = len(tracker.getJobIdsForGroup(group) or [])
+        assert n_jobs <= SEED41_JOBS_BEFORE - 4, (run, n_jobs)
+    for e in ("vitals", "claims", "ehr"):
+        assert lh.read_processed(e).count() == SEED41_COUNTS[e], e

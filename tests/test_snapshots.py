@@ -293,14 +293,22 @@ def test_sorted_compaction_restores_file_skipping(spark, table):
     ids = list(range(400))
     rng.shuffle(ids)
     for c in range(4):  # each commit spans the whole id range
+        # a fixed file count per commit, whatever the core count
         table.commit_append(
             _mk(spark, [(i, f"v{i}") for i in ids[c * 100 : (c + 1) * 100]])
+            .repartition(2)
         )
     v = table.latest_version()
     keep_before, total_before = table.prune_files(v, ("id", ">=", 300))
     frac_before = len(keep_before) / total_before
 
-    v2 = table.compact(target_file_bytes=20_000, sort_by=["id"])
+    # target a quarter of the measured table, so the compaction
+    # always emits four files
+    n_bytes = sum(
+        os.path.getsize(os.path.join(table.root, f))
+        for f in table._load(v)["files"]
+    )
+    v2 = table.compact(target_file_bytes=n_bytes // 4, sort_by=["id"])
     assert v2 > v
     keep_after, total_after = table.prune_files(v2, ("id", ">=", 300))
     assert total_after > 1

@@ -172,7 +172,7 @@ def test_etl_sink_upsert_replay_idempotent(spark, cfg, tmp_path):
     batch = spark.createDataFrame([(m,) for m in msgs], "value string")
 
     wh_up = str(tmp_path / "up")
-    sink = make_etl_sink(wh_up, cfg, upsert=True)
+    sink = make_etl_sink(wh_up, cfg, mode="upsert")
     sink(batch, 0)
     counts1 = {
         e: spark.read.parquet(os.path.join(wh_up, "processed", e)).count()
@@ -187,7 +187,7 @@ def test_etl_sink_upsert_replay_idempotent(spark, cfg, tmp_path):
     assert counts2 == counts1
 
     wh_app = str(tmp_path / "app")
-    append_sink = make_etl_sink(wh_app, cfg, upsert=False)
+    append_sink = make_etl_sink(wh_app, cfg, mode="append")
     append_sink(batch, 0)
     append_sink(batch, 1)
     n_vitals = spark.read.parquet(os.path.join(wh_app, "processed", "vitals")).count()
