@@ -114,22 +114,26 @@ def write_etl_batch(
       natural key (latest processed_at wins); only the batch's date
       partitions are rewritten.
 
-    Snapshot and append writes rebalance by ``event_date`` first, so
+    When the persisted enriched frame has more than one partition,
+    snapshot and append writes rebalance by ``event_date`` first, so
     a batch writes whole files per date instead of one sliver per
     upstream task (AQE still splits a hot date across writers). A
-    zone already holding data in the other layout (snapshot vs plain)
-    is refused before any zone is written. Unknown-type rows
-    append to ``errors/`` as JSON in every mode (at-least-once: a
-    diagnostic stream).
+    one-partition frame (a small file, a one-file micro-batch) already
+    lands each route as one file, so it is written without the
+    rebalance's shuffle. A zone already holding data in the other
+    layout (snapshot vs plain) is refused before any zone is written.
+    Unknown-type rows append to ``errors/`` as JSON in every mode
+    (at-least-once: a diagnostic stream); a batch without any writes
+    nothing there.
 
     Returns this batch's rows per route — the reference's
     Count.Globally metric (:351-355) — from ONE aggregate over the
-    persisted enriched frame after the writes, so the count is the
-    same on a txn replay, where no entity write runs. (A row-count
-    ``Observation`` per write was tried: it initializes the session's
-    ObservationManager, which is not serializable, and every later
-    Spark ML fit whose closure captures the session then fails with
-    "Task not serializable".)
+    persisted enriched frame, run between the entity writes and the
+    ``errors/`` write, so the count is the same on a txn replay, where
+    no entity write runs. (A row-count ``Observation`` per write was
+    tried: it initializes the session's ObservationManager, which is
+    not serializable, and every later Spark ML fit whose closure
+    captures the session then fails with "Task not serializable".)
     """
     from .sources.snapshots import SnapshotTable
     from .sources.upsert import merge_upsert
@@ -142,34 +146,38 @@ def write_etl_batch(
     spark = raw.sparkSession
     routed, enriched = build_etl_cached(raw, cfg)
     try:
+        # getNumPartitions runs no job; one partition has nothing to pack
+        pack = enriched.rdd.getNumPartitions() > 1
         for name, date_col in ENTITY_DATE_COL.items():
             zone = zones[name]
             df = routed[name].withColumn(
                 "event_date", F.to_date(F.col(date_col))
             )
-            if mode == "snapshot":
+            if pack and mode != "upsert":
                 # the caller rebalances: SnapshotTable._write_data never
                 # reshuffles, because it also serves the layout commits
+                df = df.hint("rebalance", "event_date")
+            if mode == "snapshot":
                 SnapshotTable(spark, zone).commit_append(
-                    df.hint("rebalance", "event_date"),
-                    txn_id=(txn_ids or {}).get(name),
+                    df, txn_id=(txn_ids or {}).get(name)
                 )
             elif mode == "append":
-                df.hint("rebalance", "event_date").write.mode(
-                    "append"
-                ).partitionBy("event_date").parquet(zone)
+                df.write.mode("append").partitionBy("event_date").parquet(zone)
             else:
                 merge_upsert(
                     spark, df, zone, UPSERT_KEYS[name],
                     version_col="processed_at", partition_col="event_date",
                 )
-        routed["unknown"].drop("_corrupt_record").write.mode("append").json(
-            os.path.join(warehouse, "errors")
-        )
-        row = enriched.agg(
+        # counted after the entity writes, which fill the cache inside
+        # their own jobs; counted first, AQE fills it in a job of its own
+        counts = enriched.agg(
             *[F.count_if(cond).alias(name) for name, cond in route_filters().items()]
-        ).first()
-        return row.asDict()
+        ).first().asDict()
+        if counts["unknown"] > 0:
+            routed["unknown"].drop("_corrupt_record").write.mode("append").json(
+                os.path.join(warehouse, "errors")
+            )
+        return counts
     finally:
         enriched.unpersist()
 

@@ -3,10 +3,13 @@ rows per FIXTURES.md edge-row guidance."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
+from healthcare_data_lakehouse_using_gcp_spark.config import EngineConfig, Thresholds
 from healthcare_data_lakehouse_using_gcp_spark.operators import etl
 from healthcare_data_lakehouse_using_gcp_spark.sources.generator import HealthcareDataGenerator
 
@@ -166,3 +169,48 @@ def test_generator_mix_end_to_end(spark, cfg):
     assert counts["unknown"] > 0
     # total routed ≤ total minus malformed
     assert sum(counts.values()) <= 200
+
+
+def test_equal_configs_share_one_expression_set(cfg):
+    # the ETL's Column trees are built once per config, not per batch
+    same = EngineConfig(as_of=cfg.as_of)
+    assert same is not cfg
+    assert etl.etl_exprs(same) is etl.etl_exprs(cfg)
+    assert etl.route_filters() is etl.route_filters()
+
+
+def test_configs_route_and_stamp_independently(spark, cfg):
+    # a threshold and a frozen "now" that differ between two configs in
+    # one session must not leak through the memoized expressions
+    other = EngineConfig(
+        thresholds=Thresholds(min_heart_rate=60),
+        as_of=cfg.as_of + dt.timedelta(days=1),
+    )
+    assert etl.etl_exprs(other) is not etl.etl_exprs(cfg)
+    msgs = [json.dumps(dict(GOOD_VITALS, heart_rate=50)), json.dumps(GOOD_VITALS)]
+    raw = _raw_df(spark, msgs)
+    for _ in range(2):  # interleaved, so neither build reuses the other's
+        for c, heart_rates in ((cfg, [50, 72]), (other, [72])):
+            rows = etl.build_etl(raw, c)["vitals"].collect()
+            assert sorted(r["heart_rate"] for r in rows) == heart_rates
+            assert {r["processed_at"] for r in rows} == {c.as_of}
+
+
+def test_routes_from_shared_expressions_union_and_join(spark, cfg):
+    # two batches built from one expression set: their routes union by
+    # name and join on patient_id like independently built frames
+    first = etl.build_etl(_raw_df(spark, [json.dumps(GOOD_VITALS), json.dumps(GOOD_CLAIM)]), cfg)
+    second = etl.build_etl(
+        _raw_df(spark, [json.dumps(dict(GOOD_VITALS, heart_rate=90)), json.dumps(GOOD_CLAIM)]), cfg
+    )
+    both = first["vitals"].unionByName(second["vitals"])
+    assert sorted(r["heart_rate"] for r in both.collect()) == [72, 90]
+    pairs = (
+        first["vitals"].alias("a")
+        .join(second["vitals"].alias("b"), "patient_id")
+        .select("patient_id", "a.heart_rate", F.col("b.heart_rate").alias("hr_b"))
+        .collect()
+    )
+    assert [(r["patient_id"], r["heart_rate"], r["hr_b"]) for r in pairs] == [("P000001", 72, 90)]
+    claims = first["vitals"].join(second["claims"], "patient_id").collect()
+    assert [r["claim_id"] for r in claims] == ["CLM000001"]

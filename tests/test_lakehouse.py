@@ -256,12 +256,16 @@ def test_stream_append_into_snapshot_zone_raises(spark, cfg, tmp_path):
 # these counts, 16 Spark jobs for a fresh snapshot run
 SEED41_COUNTS = {"vitals": 97, "claims": 45, "ehr": 36, "unknown": 7}
 SEED41_JOBS_BEFORE = 16
+# a fresh run of that one-file batch: three unshuffled entity commits,
+# the two-job count aggregate and the errors/ append
+SEED41_FRESH_JOBS = 6
 
 
 def test_run_etl_counts_in_one_aggregate(spark, cfg, tmp_path):
     # The per-route counts come from one aggregate over the persisted
     # batch, not from a count() per route: the same counts with at
-    # least 4 fewer jobs, fresh and on a txn replay.
+    # least 4 fewer jobs, fresh and on a txn replay. The one-partition
+    # batch also skips the rebalance, so a fresh run needs 6 jobs.
     raw_dir = tmp_path / "raw"
     raw_dir.mkdir()
     gen = HealthcareDataGenerator(seed=41, now=cfg.as_of)
@@ -279,5 +283,74 @@ def test_run_etl_counts_in_one_aggregate(spark, cfg, tmp_path):
         assert counts == SEED41_COUNTS, run
         n_jobs = len(tracker.getJobIdsForGroup(group) or [])
         assert n_jobs <= SEED41_JOBS_BEFORE - 4, (run, n_jobs)
+        if run == "fresh":
+            assert n_jobs <= SEED41_FRESH_JOBS, n_jobs
     for e in ("vitals", "claims", "ehr"):
         assert lh.read_processed(e).count() == SEED41_COUNTS[e], e
+
+
+def _group_jobs_and_write_plans(spark, group):
+    """The Spark job ids run under ``group`` and the physical plans of
+    the file writes among them (from the SQL status store)."""
+    jobs = set(spark.sparkContext.statusTracker().getJobIdsForGroup(group) or [])
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in range(executions.size()):
+        ui = executions.apply(i)
+        plan = ui.physicalPlanDescription()
+        if any(ui.jobs().contains(j) for j in jobs) and "InsertIntoHadoopFsRelationCommand" in plan:
+            plans.append(plan)
+    return jobs, plans
+
+
+def test_one_partition_batch_writes_without_exchange(spark, cfg, tmp_path):
+    # A one-partition micro-batch already lands each route as one file,
+    # so the writer skips the event_date rebalance and its shuffles.
+    import glob
+
+    from healthcare_data_lakehouse_using_gcp_spark.streaming.pipeline import make_etl_sink
+
+    raw = _raw_batch(spark, cfg, 200, seed=41).coalesce(1)
+    wh = str(tmp_path / "wh")
+    sc = spark.sparkContext
+    group = "one_partition_sink_batch"
+    sc.setJobGroup(group, "one-partition snapshot micro-batch")
+    try:
+        make_etl_sink(wh, cfg, mode="snapshot")(raw, 0)
+    finally:
+        sc.setJobGroup("", "")
+    jobs, plans = _group_jobs_and_write_plans(spark, group)
+    assert len(jobs) <= SEED41_FRESH_JOBS, sorted(jobs)
+    assert len(plans) == 4  # three entity commits and errors/
+    assert not [p for p in plans if "Exchange" in p]
+    lh = HealthcareLakehouse(spark, wh, cfg)
+    for e in ("vitals", "claims", "ehr"):
+        files = glob.glob(os.path.join(wh, "processed", e, "data", "*", "*.parquet"))
+        assert len(files) == 1, (e, files)
+        assert lh.read_processed(e).count() == SEED41_COUNTS[e], e
+
+
+def test_errors_zone_written_only_when_batch_has_unknowns(spark, cfg, tmp_path):
+    # errors/ gets a part file only from a batch with unknown-type rows;
+    # a clean batch writes nothing there.
+    from healthcare_data_lakehouse_using_gcp_spark.streaming.pipeline import make_etl_sink
+
+    gen = HealthcareDataGenerator(seed=41, now=cfg.as_of)
+    clean = spark.createDataFrame(
+        [(m,) for m in gen.generate_messages(100, unknown_rate=0.0)], "value string"
+    )
+    wh = tmp_path / "wh"
+    errors = wh / "errors"
+    sink = make_etl_sink(str(wh), cfg, mode="snapshot")
+
+    def part_files():
+        return sorted(p.name for p in errors.glob("part-*")) if errors.exists() else []
+
+    sink(clean, 0)
+    assert part_files() == []
+    sink(_raw_batch(spark, cfg, 200, seed=41), 1)
+    written = part_files()
+    assert written
+    assert spark.read.json(str(errors)).count() == SEED41_COUNTS["unknown"]
+    sink(clean, 2)
+    assert part_files() == written
